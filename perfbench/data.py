@@ -1,30 +1,24 @@
-"""Seeded input generators for the table-engine benchmark.
+"""The benchmark's inputs: rows of a fixed sf0.1 sample, chosen by seed.
 
-The three sources mirror the shapes of the TPC-H-style test tables the
-engine is developed against (`events`, `lineitem`, `orders`), but are
-generated here from the run's seed so that a run needs nothing outside
-its own checkout. The same seed always yields the same rows.
+`inputs/` holds a sample of the sf0.1 test dataset, written by
+`sample.py`: the first four days of `events` (about 280 rows per 2-hour
+slice, 1,500 users, five event types, JSON `props`) and the first
+24,000 `orders` (dense keys from 0). A run reads its rows from there;
+its seed picks where the run starts in the sample and every choice its
+ops make, so the same seed always gives the same inputs.
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-EPOCH = pd.Timestamp("2024-01-01")
-# one commit per 6 hours of events keeps a run of a few dozen commits
-# spanning several days, so a freshness read has older days to skip
-SLICE = pd.Timedelta(hours=6)
-EVENT_TYPES = np.array(["click", "view", "purchase", "search", "share"])
-N_USERS = 1500
-
-LINEITEM_START = pd.Timestamp("1992-01-01")
-RETURN_FLAGS = np.array(["A", "N", "R"])
-LINE_STATUS = np.array(["F", "O"])
+INPUTS = Path(__file__).resolve().parent / "inputs"
+SLICE = pd.Timedelta(hours=2)           # the events one ingest commit appends
 ORDER_STATUS = np.array(["F", "O", "P"])
-PRIORITIES = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
-                       "5-LOW"])
 
 
 def arrow_bytes(pdf: pd.DataFrame) -> int:
@@ -32,90 +26,21 @@ def arrow_bytes(pdf: pd.DataFrame) -> int:
     return pa.Table.from_pandas(pdf, preserve_index=False).nbytes
 
 
-def event_slice(seed: int, i: int) -> pd.DataFrame:
-    """Events of the i-th 6-hour slice after EPOCH (about 280 rows)."""
-    rng = np.random.default_rng([seed, 1, i])
-    n = int(rng.integers(240, 321))
-    start = EPOCH + i * SLICE
-    offs = np.sort(rng.integers(0, SLICE.value // 1000, n))
-    return pd.DataFrame({
-        "event_id": np.arange(i * 1000, i * 1000 + n, dtype="int64"),
-        "ts": (start + pd.to_timedelta(offs, unit="us")).astype("datetime64[us]"),
-        "user_id": rng.integers(0, N_USERS, n).astype("int64"),
-        "event_type": EVENT_TYPES[rng.integers(0, len(EVENT_TYPES), n)],
-        "value": np.round(rng.gamma(2.0, 10.0, n), 2),
-        "props": np.char.add("v=", rng.integers(0, 100, n).astype(str)),
-    })
+def events() -> pd.DataFrame:
+    """The sampled events, in `ts` order."""
+    return pd.read_parquet(INPUTS / "events.parquet")
 
 
-def slice_day_start(i: int) -> pd.Timestamp:
-    return (EPOCH + i * SLICE).normalize()
+def orders() -> pd.DataFrame:
+    """The sampled orders, indexed by `o_orderkey`."""
+    return pd.read_parquet(INPUTS / "orders.parquet").set_index(
+        "o_orderkey", drop=False)
 
 
-def lineitem_month(seed: int, m: int, rows: int) -> pd.DataFrame:
-    """Lineitems shipped in month m after LINEITEM_START. Order keys are
-    drawn from a sparse, month-interleaved key space (as in TPC-H, keys
-    do not follow ship dates), so min/max stats on l_orderkey cannot
-    prune and only a bucket projection can."""
-    rng = np.random.default_rng([seed, 2, m])
-    lines = rng.integers(1, 8, rows)
-    orders = np.cumsum(lines)
-    n_orders = int(np.searchsorted(orders, rows))
-    lines = lines[:n_orders + 1]
-    lines[-1] -= orders[n_orders] - rows
-    # key k of month m: 32 * k + m, so each month owns a residue class
-    # and a key's rows all live in one month
-    keys = 32 * (rng.permutation(40 * n_orders + 40)[:n_orders + 1] + 1) + m
-    okey = np.repeat(keys, lines).astype("int64")
-    linenumber = np.concatenate([np.arange(1, c + 1) for c in lines])
-    month_start = LINEITEM_START + pd.DateOffset(months=m)
-    days = (month_start + pd.DateOffset(months=1) - month_start).days
-    ship = month_start + pd.to_timedelta(rng.integers(0, days, rows), unit="D")
-    qty = rng.integers(1, 51, rows).astype("float64")
-    price = np.round(qty * rng.uniform(900.0, 2000.0, rows), 2)
-    return pd.DataFrame({
-        "l_orderkey": okey,
-        "l_partkey": rng.integers(1, 20001, rows).astype("int64"),
-        "l_suppkey": rng.integers(1, 1001, rows).astype("int64"),
-        "l_linenumber": linenumber.astype("int32"),
-        "l_quantity": qty,
-        "l_extendedprice": price,
-        "l_discount": np.round(rng.integers(0, 11, rows) / 100.0, 2),
-        "l_tax": np.round(rng.integers(0, 9, rows) / 100.0, 2),
-        "l_returnflag": RETURN_FLAGS[rng.integers(0, 3, rows)],
-        "l_linestatus": LINE_STATUS[rng.integers(0, 2, rows)],
-        "l_shipdate": ship.astype("datetime64[us]"),
-    })
-
-
-def q1(pdf: pd.DataFrame) -> dict[tuple, tuple]:
-    """TPC-H Q1 over the whole frame: (flag, status) -> aggregates."""
-    disc = pdf.l_extendedprice * (1 - pdf.l_discount)
-    g = pdf.assign(disc=disc, charge=disc * (1 + pdf.l_tax)).groupby(
-        ["l_returnflag", "l_linestatus"])
-    agg = g.agg(sum_qty=("l_quantity", "sum"),
-                sum_base=("l_extendedprice", "sum"),
-                sum_disc=("disc", "sum"), sum_charge=("charge", "sum"),
-                n=("l_quantity", "size"))
-    return {k: tuple(float(x) for x in row)
-            for k, row in zip(agg.index, agg.itertuples(index=False))}
-
-
-def orders(seed: int, n: int) -> pd.DataFrame:
-    """The initial orders table: keys 1..n."""
-    rng = np.random.default_rng([seed, 3])
-    return order_rows(rng, np.arange(1, n + 1, dtype="int64"))
-
-
-def order_rows(rng: np.random.Generator, keys: np.ndarray) -> pd.DataFrame:
-    n = len(keys)
-    date = pd.Timestamp("1995-01-01") + pd.to_timedelta(
-        rng.integers(0, 1500, n), unit="D")
-    return pd.DataFrame({
-        "o_orderkey": keys.astype("int64"),
-        "o_custkey": rng.integers(1, 15001, n).astype("int64"),
-        "o_orderstatus": ORDER_STATUS[rng.integers(0, 3, n)],
-        "o_totalprice": np.round(rng.uniform(900.0, 500000.0, n), 2),
-        "o_orderdate": date.astype("datetime64[us]"),
-        "o_orderpriority": PRIORITIES[rng.integers(0, 5, n)],
-    })
+def revised(rng: np.random.Generator, rows: pd.DataFrame) -> pd.DataFrame:
+    """Orders as an update changes them: a new status and a total
+    repriced by up to ±10 %."""
+    n = len(rows)
+    return rows.assign(
+        o_orderstatus=ORDER_STATUS[rng.integers(0, len(ORDER_STATUS), n)],
+        o_totalprice=np.round(rows.o_totalprice * rng.uniform(0.9, 1.1, n), 2))

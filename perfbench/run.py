@@ -1,17 +1,17 @@
 """Table-engine benchmark: one seeded workload per invocation.
 
-    python3 perfbench/run.py --workload ingest|scan|cdc --seed N \\
+    python3 perfbench/run.py --workload ingest|cdc --seed N \\
         --seconds S --trace 0|1
 
 One client drives a closed loop (the next op starts when the previous
 one returns) against `icelake_spark.default_session` at
-`local[<cores>]`. Set-up is session start, input generation, the
-fixture build and a warm-up round with one untimed op of each kind; the
-fixture is built BUILDS times in fresh warehouses and setup_s counts
-the median build. The last build is then measured for `--seconds`,
-rounded up to whole rounds of the workload's op cycle. Every op's
-result is checked against a model derived from the seed, outside the
-timed interval.
+`local[<cores>]`. Set-up is session start, loading the input sample,
+the fixture build and untimed warm-up rounds of the op cycle.
+The run then times ceil(S / round_s) rounds of the workload's op cycle,
+a fixed amount of work, so a faster engine ends in the same table state
+as a slower one. Every timed round is laid out (inputs, Spark
+DataFrames, expected results) before the clock starts, and every op's
+result is checked against the workload's model after it stops.
 
 Prints one row of end-to-end metrics, the workload's input property
 shares and, with `--trace 1`, per-layer metrics from wrappers installed
@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import resource
 import shlex
@@ -41,7 +42,6 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-BUILDS = 3          # fixture builds per run; setup_s counts their median
 
 E2E_UNITS = {
     "setup_s": "s", "ops_per_s": "ops/s", "rows_per_s": "rows/s",
@@ -162,17 +162,29 @@ class Jobs:
         return out
 
 
-def run_phase(workload, rounds, seconds: float, tracer, jobs) -> tuple[list, float]:
-    """Run whole rounds until `seconds` have passed (and every kind of
-    the mix has run once): whole rounds keep every run's op mix alike."""
+def run_phase(ops: list, tracer, jobs) -> tuple[list, float]:
+    """Run the laid-out ops in order; returns their records and the
+    wall time of the phase."""
     records: list[Record] = []
     per_kind: dict[str, int] = {}
     start = time.perf_counter()
-    while (time.perf_counter() - start < seconds
-           or not set(workload.mix) <= per_kind.keys()):
-        for op in next(rounds):
-            records.append(run_op(op, len(records), per_kind, tracer, jobs))
+    for op in ops:
+        records.append(run_op(op, len(records), per_kind, tracer, jobs))
     return records, time.perf_counter() - start
+
+
+def check(ops: list, records: list) -> None:
+    """Check each op's result; a failed check marks its record failed."""
+    for n, (op, rec) in enumerate(zip(ops, records)):
+        if not rec.ok:
+            continue
+        try:
+            rec.ok = bool(op.check(rec.result))
+        except Exception:
+            traceback.print_exc()
+            rec.ok = False
+        if not rec.ok:
+            print(f"check failed: {op.kind} op {n}", file=sys.stderr)
 
 
 def run_op(op, n: int, per_kind: dict, tracer, jobs) -> Record:
@@ -192,14 +204,6 @@ def run_op(op, n: int, per_kind: dict, tracer, jobs) -> Record:
     if tracer is not None:
         tracer.enabled = False
     rec = Record(op.kind, t1 - t0, ok, op.rows, op.user_bytes, traced, result)
-    if ok:
-        try:
-            rec.ok = bool(op.check(result))
-        except Exception:
-            traceback.print_exc()
-            rec.ok = False
-        if not rec.ok:
-            print(f"check failed: {op.kind} op {n}", file=sys.stderr)
     if hasattr(result, "to_df_done"):
         rec.exec_s = t1 - result.to_df_done
     if group is not None:
@@ -207,18 +211,14 @@ def run_op(op, n: int, per_kind: dict, tracer, jobs) -> Record:
     return rec
 
 
-def warm(workload) -> tuple[object, int]:
-    """Run the first rounds, untimed, until each kind of the workload's
-    mix has run once. Returns (the rounds that follow, failed checks)."""
-    rounds = workload.rounds()
-    seen, failed = set(), 0
-    while not set(workload.mix) <= seen:
-        for op in next(rounds):
-            if not op.check(op.run()):
-                print(f"check failed: warm-up {op.kind}", file=sys.stderr)
-                failed += 1
-            seen.add(op.kind)
-    return rounds, failed
+def warm(ops: list) -> int:
+    """Run a warm-up round, untimed; returns its failed checks."""
+    failed = 0
+    for op in ops:
+        if not op.check(op.run()):
+            print(f"check failed: warm-up {op.kind}", file=sys.stderr)
+            failed += 1
+    return failed
 
 
 def e2e_metrics(records, wall, setup_s, workload, table_dir) -> dict:
@@ -288,7 +288,7 @@ def fmt_row(name: str, m: dict, tails: dict) -> str:
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True,
-                    choices=("ingest", "cdc", "scan"))
+                    choices=("ingest", "cdc"))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -313,21 +313,22 @@ def main(argv=None) -> int:
         spark.sparkContext.setLogLevel("ERROR")
         session_s = time.perf_counter() - t0
 
-        workload = WORKLOADS[args.workload](spark, args.seed)
+        cls = WORKLOADS[args.workload]
+        workload = cls(spark, args.seed, math.ceil(args.seconds / cls.round_s))
         t0 = time.perf_counter()
         workload.source()
         source_s = time.perf_counter() - t0
-        builds = []
-        for b in range(BUILDS):
-            if b:
-                shutil.rmtree(tmp / f"wh{b - 1}")
-            t0 = time.perf_counter()
-            workload.build(str(tmp / f"wh{b}"))
-            builds.append(time.perf_counter() - t0)
         t0 = time.perf_counter()
-        rounds, failed = warm(workload)
+        workload.build(str(tmp / "tables"))
+        build_s = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        rounds = workload.rounds()
+        failed = sum(warm(next(rounds)) for _ in range(workload.warm_rounds))
         warm_s = time.perf_counter() - t0
-        setup_s = session_s + source_s + statistics.median(builds) + warm_s
+        t0 = time.perf_counter()
+        ops = [op for r in rounds for op in r]
+        layout_s = time.perf_counter() - t0
+        setup_s = session_s + source_s + build_s + warm_s + layout_s
 
         from icelake_spark.metrics import REGISTRY
 
@@ -338,11 +339,11 @@ def main(argv=None) -> int:
             tracer.install()
             jobs = Jobs(spark.sparkContext)
         try:
-            records, wall = run_phase(workload, rounds, args.seconds,
-                                      tracer, jobs)
+            records, wall = run_phase(ops, tracer, jobs)
         finally:
             if tracer is not None:
                 tracer.uninstall()
+        check(ops, records)
         final_ok = workload.final_check()
         table_dir = workload.catalog.table_path(workload.ident)
         m, tails = e2e_metrics(records, wall, setup_s, workload, table_dir)
@@ -368,8 +369,9 @@ def main(argv=None) -> int:
     correct = failed == 0 and final_ok
     print(fmt_row(args.workload, m, tails))
     print(f"{args.workload} setup: session {session_s:.3f} s, source "
-          f"{source_s:.3f} s, fixture builds " + ", ".join(
-              f"{b:.3f}" for b in builds) + f" s, warm-up {warm_s:.3f} s")
+          f"{source_s:.3f} s, fixture build {build_s:.3f} s, warm-up "
+          f"{warm_s:.3f} s, layout {layout_s:.3f} s; {workload.n_rounds} "
+          f"timed rounds, {len(records)} ops in {wall:.3f} s")
     print(f"{args.workload} properties: " + ", ".join(
         f"{k}={v:.4g}" for k, v in props.items())
         + " (manifest re-reads counted on the read path)")
@@ -380,9 +382,8 @@ def main(argv=None) -> int:
     else:
         wanted = spec["end_to_end"]
     values = layers if layers is not None else m
-    # `scan`, which BENCHMARK.json does not gate, has no append metrics
     metrics = {w["name"]: {"value": values[w["name"]], "unit": w["unit"]}
-               for w in wanted if w["name"] in values}
+               for w in wanted}
     print(json.dumps({"correct": correct, "attempted": len(records),
                       "failed": failed, "metrics": metrics}))
     return 0 if correct else 1

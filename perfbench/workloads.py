@@ -1,23 +1,23 @@
-"""The benchmark's three workloads, each a seeded, endless stream of ops.
+"""The benchmark's workloads, each a seeded, fixed sequence of ops.
 
 A workload builds its fixture table in a fresh warehouse, then yields
-rounds of `Op`s, one cycle of its op mix each. The runner times
-`Op.run`, then calls `Op.check` on its result outside the timed
-interval. A workload keeps its own model of what the table must hold,
-updated as it lays out each round, so every check compares against
-values derived from the seed alone.
+`warm_rounds` warm-up rounds and `n_rounds` timed rounds of `Op`s, one
+cycle of its op mix each. The runner lays out every timed round before it starts
+the clock, times `Op.run`, and calls `Op.check` on the results after
+the timed phase. A workload keeps its own model of what the table must
+hold, updated as it lays out each round, so every check compares
+against values derived from the input sample and the seed alone.
 
-- `ingest`: 6-hour event slices appended into a `day(ts),
-  bucket[4](user_id)` table; a freshness lookup of today's rows after
-  every commit and a table-wide aggregate after every second. Commit
-  history grows with every op.
-- `scan`: a lineitem table built by one commit per month, partitioned
-  `month(l_shipdate), bucket[4](l_orderkey)`; a fixed mix of key
-  lookups and TPC-H Q1 aggregates over one unchanging snapshot.
-- `cdc`: an orders table (`bucket[8](o_orderkey)`) taking rounds of
-  new-order append, upsert (equality deletes), key lookup, range delete
-  (position deletes), key lookup and aggregate with those deletes
-  applied, then a compaction that clears them.
+- `ingest`: 2-hour slices of the sampled events, from 06:00 of a seeded
+  day, appended one commit each into a `day(ts), bucket[4](user_id)`
+  table; a freshness lookup of today's rows after every commit and a
+  table-wide aggregate after every second. Commit history grows with
+  every op, and half-way through a run the day turns, so later
+  freshness reads have a day's data to skip.
+- `cdc`: the sampled orders table (`bucket[8](o_orderkey)`) taking
+  rounds of new-order appends, an upsert (equality deletes), a range
+  delete (position deletes), key lookups and aggregates with those
+  deletes applied, then a compaction that clears them.
 """
 
 from __future__ import annotations
@@ -85,21 +85,26 @@ def create(catalog, ident: str, spark, pdf: pd.DataFrame, parts: list[str]):
 
 
 class Workload:
-    """Base: `build` makes the fixture, `rounds` streams the timed ops."""
+    """Base: `source` loads the inputs, `build` makes the fixture,
+    `rounds` yields the warm-up rounds, then the `n_rounds` timed ones."""
 
     name = ""
     ident = ""
-    mix: tuple[str, ...] = ()           # op kinds every warm-up covers
+    round_s = 1.0       # seconds of --seconds per round: --seconds S
+                        # times ceil(S / round_s) rounds, however long
+                        # they take
+    warm_rounds = 1
 
-    def __init__(self, spark, seed: int):
+    def __init__(self, spark, seed: int, n_rounds: int):
         self.spark = spark
         self.seed = seed
+        self.n_rounds = n_rounds
         self.catalog = None
         self.table = None
         self.live_bytes = 0             # Arrow bytes of the live rows
 
     def source(self) -> None:
-        """Generate the inputs the fixture is built from."""
+        """Load the inputs the fixture and the ops are made from."""
 
     def build(self, warehouse: str) -> None:
         self.catalog = StorageCatalog(warehouse)
@@ -114,13 +119,38 @@ class Workload:
 class Ingest(Workload):
     name = "ingest"
     ident = "db.events"
-    mix = ("append", "lookup", "scan")
+    round_s = 3.0
+    # A read of more than 32 files makes Spark list them with a job of
+    # its own (spark.sql.sources.parallelPartitionDiscovery.threshold),
+    # which triples the aggregate's time. A round adds 8 files, so after
+    # two warm-up rounds all but the first two timed aggregates cross it
+    # and the median lies in one mode.
+    warm_rounds = 2
+    start_hour = 6      # at --seconds 15 the day turns half-way through
+                        # the timed rounds
+
+    def source(self) -> None:
+        self.events = data.events()
+        first = self.events.ts.iloc[0].normalize()
+        days = (self.events.ts.iloc[-1].normalize() - first).days + 1
+        commits = 2 * (self.warm_rounds + self.n_rounds)
+        span = pd.Timedelta(hours=self.start_hour) + commits * data.SLICE
+        last = days - math.ceil(span / pd.Timedelta(days=1))
+        if last < 0:
+            raise ValueError(f"{commits} commits of {data.SLICE} do not fit "
+                             f"the {days}-day event sample")
+        day = int(np.random.default_rng([self.seed, 1]).integers(0, last + 1))
+        self.start = first + pd.Timedelta(days=day, hours=self.start_hour)
+
+    def _slice(self, i: int) -> pd.DataFrame:
+        lo = self.start + i * data.SLICE
+        a, b = self.events.ts.searchsorted([lo, lo + data.SLICE])
+        return self.events.iloc[a:b].reset_index(drop=True)
 
     def build(self, warehouse: str) -> None:
         super().build(warehouse)
         self.table = create(self.catalog, self.ident, self.spark,
-                            data.event_slice(self.seed, 0),
-                            ["day(ts)", "bucket[4](user_id)"])
+                            self.events, ["day(ts)", "bucket[4](user_id)"])
 
     def rounds(self) -> Iterator[list[Op]]:
         spark, finish_scan = self.spark, (
@@ -128,96 +158,37 @@ class Ingest(Workload):
                 F.count(F.lit(1)), F.sum("value")))
         day_rows: dict = defaultdict(lambda: [0, 0.0])
         by_type: dict = defaultdict(lambda: [0, 0.0])
-        i = 0
-        while True:
-            pdf = data.event_slice(self.seed, i)
-            df = spark.createDataFrame(pdf)
-            nbytes = data.arrow_bytes(pdf)
-            self.live_bytes += nbytes
-            day = data.slice_day_start(i)
-            day_rows[day][0] += len(pdf)
-            day_rows[day][1] += float(pdf.value.sum())
-            for t, g in pdf.groupby("event_type").value:
-                by_type[t][0] += len(g)
-                by_type[t][1] += float(g.sum())
-            ops = [Op("append", lambda df=df: self.table.append(df),
-                      lambda _: True, len(pdf), nbytes)]
-            want = tuple(day_rows[day])
-            ops.append(Op("lookup", lambda day=day: read(
-                self.catalog, self.ident, spark,
-                lambda df: df.agg(F.count(F.lit(1)), F.sum("value")),
-                filter=f"ts >= '{day:%Y-%m-%d %H:%M:%S}'",
-                matched=lambda rows: rows[0][0]),
-                lambda r, want=want: (
-                    r.rows[0][0] == want[0] and close(r.rows[0][1], want[1]))))
-            if i % 2 == 1:
-                want = {t: tuple(v) for t, v in by_type.items()}
-                ops.append(Op("scan", lambda: read(
-                    self.catalog, self.ident, spark, finish_scan),
-                    lambda r, want=want: len(r.rows) == len(want) and all(
-                        row[1] == want[row[0]][0] and close(row[2], want[row[0]][1])
-                        for row in r.rows)))
+        for r in range(self.warm_rounds + self.n_rounds):
+            ops = []
+            for i in (2 * r, 2 * r + 1):
+                pdf = self._slice(i)
+                df = spark.createDataFrame(pdf)
+                nbytes = data.arrow_bytes(pdf)
+                self.live_bytes += nbytes
+                day = (self.start + i * data.SLICE).normalize()
+                day_rows[day][0] += len(pdf)
+                day_rows[day][1] += float(pdf.value.sum())
+                for t, g in pdf.groupby("event_type").value:
+                    by_type[t][0] += len(g)
+                    by_type[t][1] += float(g.sum())
+                ops.append(Op("append", lambda df=df: self.table.append(df),
+                              lambda _: True, len(pdf), nbytes))
+                want = tuple(day_rows[day])
+                ops.append(Op("lookup", lambda day=day: read(
+                    self.catalog, self.ident, spark,
+                    lambda df: df.agg(F.count(F.lit(1)), F.sum("value")),
+                    filter=f"ts >= '{day:%Y-%m-%d %H:%M:%S}'",
+                    matched=lambda rows: rows[0][0]),
+                    lambda res, want=want: (
+                        res.rows[0][0] == want[0]
+                        and close(res.rows[0][1], want[1]))))
+            want = {t: tuple(v) for t, v in by_type.items()}
+            ops.append(Op("scan", lambda: read(
+                self.catalog, self.ident, spark, finish_scan),
+                lambda res, want=want: len(res.rows) == len(want) and all(
+                    row[1] == want[row[0]][0] and close(row[2], want[row[0]][1])
+                    for row in res.rows)))
             yield ops
-            i += 1
-
-
-def q1_frame(df):
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return df.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum("l_quantity"), F.sum("l_extendedprice"), F.sum(disc),
-        F.sum(disc * (1 + F.col("l_tax"))), F.count(F.lit(1)))
-
-
-class Scan(Workload):
-    name = "scan"
-    ident = "db.lineitem"
-    mix = ("lookup", "scan")
-    months = 6
-    rows_per_month = 5000
-    lookup_share = 0.75
-
-    def source(self) -> None:
-        self.frames = [data.lineitem_month(self.seed, m, self.rows_per_month)
-                       for m in range(self.months)]
-        full = pd.concat(self.frames, ignore_index=True)
-        self.full = full
-        self.q1 = data.q1(full)
-        self.by_key = full.groupby("l_orderkey").indices
-        self.keys = np.array(sorted(self.by_key))
-        self.fixture_bytes = sum(data.arrow_bytes(f) for f in self.frames)
-
-    def build(self, warehouse: str) -> None:
-        super().build(warehouse)
-        self.table = create(self.catalog, self.ident, self.spark,
-                            self.frames[0],
-                            ["month(l_shipdate)", "bucket[4](l_orderkey)"])
-        for f in self.frames:
-            self.table.append(self.spark.createDataFrame(f))
-        self.live_bytes = self.fixture_bytes
-
-    def _lookup_ok(self, r: ReadResult, key: int) -> bool:
-        want = self.full.iloc[self.by_key[key]].itertuples(index=False)
-        return sorted(tuple(row) for row in r.rows) == sorted(
-            tuple(_py(v) for v in t) for t in want)
-
-    def _q1_ok(self, r: ReadResult) -> bool:
-        return len(r.rows) == len(self.q1) and all(
-            all(close(a, b) for a, b in zip(row[2:], self.q1[(row[0], row[1])]))
-            for row in r.rows)
-
-    def rounds(self) -> Iterator[list[Op]]:
-        rng = np.random.default_rng([self.seed, 5])
-        while True:
-            if rng.random() < self.lookup_share:
-                key = int(rng.choice(self.keys))
-                yield [Op("lookup", lambda key=key: read(
-                    self.catalog, self.ident, self.spark, lambda df: df,
-                    filter=f"l_orderkey = {key}"),
-                    lambda r, key=key: self._lookup_ok(r, key))]
-            else:
-                yield [Op("scan", lambda: read(
-                    self.catalog, self.ident, self.spark, q1_frame),
-                    self._q1_ok)]
 
 
 def _py(v):
@@ -227,79 +198,93 @@ def _py(v):
     return v.item() if hasattr(v, "item") else v
 
 
-ORDER_COLS = list(data.orders(0, 1).columns)
-
-
 class Cdc(Workload):
     name = "cdc"
     ident = "db.orders"
-    mix = ("append", "upsert", "delete", "lookup", "scan")
+    round_s = 5.5
     initial_orders = 20000
-    new_orders = 200
+    new_orders = 100                    # per append, two a round
     upsert_keys = 500
     new_keys = 50
     delete_span = 50
 
     def source(self) -> None:
-        self.initial = data.orders(self.seed, self.initial_orders)
-        self.initial_bytes = data.arrow_bytes(self.initial)
+        self.orders = data.orders()
+        self.cols = list(self.orders.columns)
+        need = self.initial_orders + (self.warm_rounds + self.n_rounds) * (
+            2 * self.new_orders + self.new_keys)
+        if need > len(self.orders):
+            raise ValueError(f"{self.n_rounds} rounds need {need} orders; "
+                             f"the sample has {len(self.orders)}")
+        self.initial = self.orders.iloc[:self.initial_orders]
 
     def build(self, warehouse: str) -> None:
         super().build(warehouse)
         self.table = create(self.catalog, self.ident, self.spark,
                             self.initial, ["bucket[8](o_orderkey)"])
-        self.table.append(self.spark.createDataFrame(self.initial))
-        self.model = self.initial.set_index("o_orderkey", drop=False)
-        self.max_key = self.initial_orders
-        self.live_bytes = self.initial_bytes
+        self.table.append(self.spark.createDataFrame(
+            self.initial.reset_index(drop=True)))
+        self.model = self.initial
+        self.taken = self.initial_orders    # sample rows in the table so far
+
+    def _take(self, n: int) -> pd.DataFrame:
+        """The next n orders of the sample, as new orders."""
+        rows = self.orders.iloc[self.taken:self.taken + n]
+        self.taken += n
+        return rows
 
     def _lookup(self, rng) -> Op:
         """Key lookup of a live order."""
         key = int(rng.choice(self.model.index.values))
-        want = [tuple(_py(v) for v in self.model.loc[key, ORDER_COLS])]
+        want = [tuple(_py(v) for v in self.model.loc[key, self.cols])]
         return Op("lookup", lambda: read(
             self.catalog, self.ident, self.spark, lambda d: d,
             filter=f"o_orderkey = {key}"),
             lambda res: [tuple(x) for x in res.rows] == want)
 
-    def _aggregate(self) -> dict:
+    def _append(self) -> Op:
+        """Append of the sample's next batch of new orders."""
+        rows = self._take(self.new_orders)
+        df = self.spark.createDataFrame(rows.reset_index(drop=True))
+        self.model = pd.concat([self.model, rows])
+        return Op("append", lambda: self.table.append(df), lambda _: True,
+                  len(rows), data.arrow_bytes(rows))
+
+    def _scan(self) -> Op:
+        """Aggregate over the whole table, the live deletes applied."""
         g = self.model.groupby("o_orderstatus").o_totalprice
-        return {k: (int(c), float(s))
+        want = {k: (int(c), float(s))
                 for k, c, s in zip(g.size().index, g.size(), g.sum())}
+        return Op("scan", lambda: read(
+            self.catalog, self.ident, self.spark,
+            lambda d: d.groupBy("o_orderstatus").agg(
+                F.count(F.lit(1)), F.sum("o_totalprice"))),
+            lambda res: len(res.rows) == len(want) and all(
+                row[1] == want[row[0]][0] and close(row[2], want[row[0]][1])
+                for row in res.rows))
 
     def rounds(self) -> Iterator[list[Op]]:
         spark = self.spark
-        r = 0
-        while True:
+        for r in range(self.warm_rounds + self.n_rounds):
             rng = np.random.default_rng([self.seed, 4, r])
-            # append: a batch of new orders
-            keys = np.arange(self.max_key + 1, self.max_key + 1 + self.new_orders)
-            self.max_key += self.new_orders
-            rows = data.order_rows(rng, keys)
-            df = spark.createDataFrame(rows)
-            self.model = pd.concat([self.model,
-                                    rows.set_index("o_orderkey", drop=False)])
-            ops = [Op("append", lambda df=df: self.table.append(df),
-                      lambda _: True, len(rows), data.arrow_bytes(rows))]
-            # upsert: recent keys favoured, plus a few brand-new orders
-            recent = self.max_key - np.floor(rng.exponential(
-                self.max_key / 10, self.upsert_keys - self.new_keys))
-            keys = np.unique(np.concatenate([
-                np.clip(recent, 1, self.max_key),
-                np.arange(self.max_key + 1, self.max_key + 1 + self.new_keys)]))
-            self.max_key += self.new_keys
-            rows = data.order_rows(rng, keys)
-            df = spark.createDataFrame(rows)
-            nbytes = data.arrow_bytes(rows)
+            ops = [self._append()]
+            # upsert: revisions of orders, recent ones favoured, plus a
+            # few brand-new orders
+            pos = self.taken - 1 - np.floor(rng.exponential(
+                self.taken / 10, self.upsert_keys - self.new_keys))
+            pos = np.unique(np.clip(pos, 0, self.taken - 1).astype(int))
+            rows = pd.concat([data.revised(rng, self.orders.iloc[pos]),
+                              self._take(self.new_keys)])
+            df = spark.createDataFrame(rows.reset_index(drop=True))
             self.model = pd.concat([
-                self.model.drop(keys, errors="ignore"),
-                rows.set_index("o_orderkey", drop=False)])
+                self.model.drop(rows.index, errors="ignore"), rows])
             ops.append(Op("upsert", lambda df=df: self.table.upsert(
                 df, key_cols=["o_orderkey"]), lambda _: True,
-                len(rows), nbytes))
-            ops.append(self._lookup(rng))
+                len(rows), data.arrow_bytes(rows)))
+            ops.append(self._append())
             # delete a key range
-            lo = int(rng.integers(1, self.max_key - self.delete_span))
+            max_key = int(self.orders.o_orderkey.iloc[self.taken - 1])
+            lo = int(rng.integers(0, max_key - self.delete_span))
             hi = lo + self.delete_span
             gone = self.model.index[(self.model.index >= lo)
                                     & (self.model.index < hi)]
@@ -307,29 +292,23 @@ class Cdc(Workload):
             ops.append(Op("delete", lambda lo=lo, hi=hi: self.table.delete_where(
                 spark, f"o_orderkey >= {lo} AND o_orderkey < {hi}"),
                 lambda _: True, len(gone)))
-            ops.append(self._lookup(rng))
-            want_agg = self._aggregate()
-            ops.append(Op("scan", lambda: read(
-                self.catalog, self.ident, spark,
-                lambda d: d.groupBy("o_orderstatus").agg(
-                    F.count(F.lit(1)), F.sum("o_totalprice"))),
-                lambda res, want=want_agg: len(res.rows) == len(want) and all(
-                    row[1] == want[row[0]][0] and close(row[2], want[row[0]][1])
-                    for row in res.rows)))
+            # reads come in pairs on one table state, so each kind's
+            # samples are alike and its median is not split between states
+            ops += [self._lookup(rng), self._lookup(rng), self._scan(),
+                    self._scan()]
             # every round ends in a compaction, so every round does the
-            # same work: a run's op mix is alike however many rounds fit
+            # same work
             ops.append(Op("compact", lambda: maintenance.rewrite_data_files(
                 self.table, spark), lambda _: True))
             yield ops
-            r += 1
 
     def final_check(self) -> bool:
         """End state == model, by symmetric EXCEPT ALL."""
         self.live_bytes = data.arrow_bytes(self.model)
         got = self.catalog.load_table(self.ident).to_df(self.spark) \
-            .select(*ORDER_COLS)
+            .select(*self.cols)
         want = self.spark.createDataFrame(
-            self.model.reset_index(drop=True)[ORDER_COLS])
+            self.model.reset_index(drop=True)[self.cols])
         extra, missing = got.exceptAll(want).count(), want.exceptAll(got).count()
         if extra or missing:
             print(f"cdc end state: {extra} rows not in the model, {missing} "
@@ -337,4 +316,4 @@ class Cdc(Workload):
         return not extra and not missing
 
 
-WORKLOADS = {w.name: w for w in (Ingest, Scan, Cdc)}
+WORKLOADS = {w.name: w for w in (Ingest, Cdc)}
